@@ -29,21 +29,28 @@ Spark-first differences (deliberate, documented):
   opaque SQL string to a server.
 - ingest lands in the session catalog as a Parquet-backed table with the
   reference's first-writer-defines-schema, append-wins policy
-  (``CREATE TABLE IF NOT EXISTS`` + insert, main.py:263-286). The 10k
-  driver-side batch loop becomes per-partition task writes.
+  (``CREATE TABLE IF NOT EXISTS`` + insert, main.py:263-286). The upload
+  body is already in driver memory, so it is parsed there once with the
+  reference's own pandas call and written as one Parquet file by one
+  Spark job; the 10k-row insert loop goes away.
+
+Each request runs only the Spark jobs its answer needs: ``connect`` and
+``get_columns`` read the catalog without a job, ``export_flatfile`` runs
+one bounded collect and ``import_flatfile`` one write.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
 from datetime import datetime, timezone
+from io import BytesIO
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
-from ..catalog import MAX_LIST_TABLES, schema_to_columns
-from ..sources.csv_io import export_csv_rows, read_csv_compat
+from ..catalog import list_tables, schema_to_columns
+from ..sources.csv_io import export_csv_rows, validate_upload_extension
 from .connector import route
 from .models import ColumnSelection, ConnectionInfo, build_export_dataframe
 
@@ -66,13 +73,11 @@ def connect(spark: SparkSession, conn: ConnectionInfo) -> dict[str, Any]:
     probe is capped at 1000 names like the reference's
     ``max_result_rows`` setting (main.py:102). When external routing is
     enabled (connector.route), the listing comes from the real server
-    ``conn`` names; otherwise from the session catalog."""
+    ``conn`` names; otherwise from the session catalog
+    (:func:`catalog.list_tables`, no Spark job)."""
     try:
         be = route(conn)
-        if be is not None:
-            names = be.list_tables()
-        else:
-            names = [t.name for t in spark.catalog.listTables()][:MAX_LIST_TABLES]
+        names = be.list_tables() if be is not None else list_tables(spark)
     except Exception as e:  # noqa: BLE001 — mirror blanket 400 (main.py:112-118)
         raise ApiError(400, f"Connection failed: {e}") from e
     return {
@@ -113,10 +118,11 @@ def get_columns(spark: SparkSession, conn: ConnectionInfo, table: str) -> dict[s
 def export_flatfile(
     spark: SparkSession, conn: ConnectionInfo, selection: ColumnSelection
 ) -> dict[str, Any]:
-    """Query → inline CSV (main.py:163-208): zero-row short-circuit
-    without materializing (main.py:185-191), else CSV string with header
+    """Query → inline CSV (main.py:163-208): the zero-row "No data
+    found" short-circuit (main.py:185-191), else CSV string with header
     = exactly the selected columns (BOM-less, matching the reference's
-    actual response body — see csv_io.export_csv_rows).
+    actual response body — see csv_io.export_csv_rows). One bounded
+    collect answers both, so an export is one Spark job.
 
     The ``query`` echo field reproduces the SQL text the reference
     would have generated (main.py:176-180) — the actual execution is
@@ -140,8 +146,6 @@ def export_flatfile(
             if not rows:
                 return {"status": "success", "data": "", "count": 0,
                         "message": "No data found"}
-            import pandas as pd
-
             csv_data = pd.DataFrame(
                 rows, columns=selection.columns
             ).to_csv(index=False)
@@ -155,14 +159,13 @@ def export_flatfile(
         except Exception as e:  # noqa: BLE001 — reference maps all to 500
             raise ApiError(500, f"Export failed: {e}") from e
     try:
-        df = build_export_dataframe(spark, selection)
-        if df.isEmpty():
-            return {"status": "success", "data": "", "count": 0,
-                    "message": "No data found"}
         # row count from the collected frame, like the reference's
         # len(result_rows) — counting '\n' in the CSV overcounts when
         # field values carry quoted embedded newlines
-        csv_data, count = export_csv_rows(df)
+        csv_data, count = export_csv_rows(build_export_dataframe(spark, selection))
+        if count == 0:
+            return {"status": "success", "data": "", "count": 0,
+                    "message": "No data found"}
         return {
             "status": "success",
             "data": csv_data,
@@ -170,8 +173,6 @@ def export_flatfile(
             "query": query,
             "exported_at": _now(),
         }
-    except ApiError:
-        raise
     except Exception as e:  # noqa: BLE001 — reference maps all to 500
         raise ApiError(500, f"Export failed: {e}") from e
 
@@ -187,51 +188,48 @@ def import_flatfile(
     """CSV upload → catalog table (main.py:210-302).
 
     Keeps every reference semantic: .csv/.txt extension gate (400),
-    empty-file 400, all-string compat parse (``dtype=str,
-    na_filter=False`` ≡ ``read_csv_compat``), first-writer-defines-schema
-    append policy, and the ``{count, columns, table}`` response. The
-    upload is spooled to a temp file so executors parse the CSV splits —
-    at API scale the contents arrive in memory anyway, but the parse and
-    write stay distributed.
+    empty-file 400, first-writer-defines-schema append policy, and the
+    ``{count, columns, table}`` response. The body is parsed once, on
+    the driver, with the reference's own call (main.py:234-239):
+    ``pd.read_csv(..., dtype=str, na_filter=False)``, so every column is
+    a string, an empty cell stays ``''`` and a ragged row fails with
+    pandas' ``ParserError`` (500) instead of being repaired. The rows
+    are written as one Parquet file by one Spark job.
     """
-    if not filename.lower().endswith((".csv", ".txt")):
-        raise ApiError(400, "Only CSV files are supported")
-    tmp = tempfile.NamedTemporaryFile(
-        mode="wb", suffix=".csv", delete=False
-    )
     try:
-        tmp.write(contents)
-        tmp.close()
-        # multiline=True: uploads are single bounded files (faithful to
-        # pandas' whole-file parse); splittability doesn't matter here
-        df = read_csv_compat(spark, tmp.name, delimiter=delimiter, multiline=True)
-        if df.isEmpty() or not df.columns:
+        validate_upload_extension(filename)
+    except ValueError as e:
+        raise ApiError(400, "Only CSV files are supported") from e
+    try:
+        try:
+            pdf = pd.read_csv(
+                BytesIO(contents), delimiter=delimiter, dtype=str, na_filter=False
+            )
+        except pd.errors.EmptyDataError:  # not even a header line
+            pdf = pd.DataFrame()
+        if pdf.empty:
             raise ApiError(400, "File is empty or invalid format")
+        columns = list(pdf.columns)
         be = route(conn)
         if be is not None:
             # routed import (main.py:258-286): all-String IF NOT
             # EXISTS auto-DDL + 10k-row batched inserts against the
-            # real server. The collect is bounded by construction —
-            # these rows arrived in THIS request's multipart body.
-            be.create_table_all_string(table, df.columns)
-            count = be.insert_rows(
-                table, df.columns, [list(r) for r in df.collect()]
-            )
-            return {
-                "status": "success",
-                "count": count,
-                "columns": df.columns,
-                "table": table,
-                "imported_at": _now(),
-            }
-        # append-wins / IF NOT EXISTS policy: first writer defines the
-        # schema; later ingests append (main.py:263-268 + insert loop).
-        df.write.mode("append").format("parquet").saveAsTable(table)
-        count = df.count()  # inserted rows this call, like the reference
+            # real server
+            be.create_table_all_string(table, columns)
+            count = be.insert_rows(table, columns, pdf.values.tolist())
+        else:
+            # append-wins / IF NOT EXISTS policy: first writer defines
+            # the schema; later ingests append (main.py:263-268).
+            # coalesce(1): createDataFrame slices a pandas frame into
+            # defaultParallelism partitions, one file each.
+            schema = T.StructType([T.StructField(c, T.StringType()) for c in columns])
+            df = spark.createDataFrame(pdf, schema).coalesce(1)
+            df.write.mode("append").format("parquet").saveAsTable(table)
+            count = len(pdf)  # inserted rows this call, like the reference
         return {
             "status": "success",
             "count": count,
-            "columns": df.columns,
+            "columns": columns,
             "table": table,
             "imported_at": _now(),
         }
@@ -239,8 +237,6 @@ def import_flatfile(
         raise
     except Exception as e:  # noqa: BLE001
         raise ApiError(500, f"Import failed: {e}") from e
-    finally:
-        os.unlink(tmp.name)
 
 
 def health(spark: SparkSession) -> dict[str, Any]:

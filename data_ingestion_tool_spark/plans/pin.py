@@ -65,8 +65,16 @@ def unpin(df: DataFrame) -> None:
     per round for the life of the loop (round-13 ADVICE). A pinned
     frame's plan is a ``LogicalRDD`` over the persisted/checkpointed
     internal RDD; unpersisting that RDD frees the blocks immediately
-    instead of waiting for the JVM-side reference to be GC'd. Failures
-    are swallowed — this is hygiene, never correctness."""
+    instead of waiting for the JVM-side reference to be GC'd.
+
+    Precondition: every consumer of the pinned frame must already be
+    materialized (for example, the next round's frame eagerly pinned).
+    A local pin has no lineage to recompute from, so unpinning it
+    destroys its only copy, and any later action on it fails instead of
+    recomputing. In reliable mode (``DataFrame.checkpoint``) only the
+    executor blocks are released: the checkpoint files stay in the
+    checkpoint directory, one set per pin, until it is cleaned.
+    Errors from the private accessor are swallowed."""
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception:  # noqa: BLE001 - private accessor; best-effort only

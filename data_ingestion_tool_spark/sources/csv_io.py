@@ -55,8 +55,11 @@ def read_csv_compat(
 
     ``multiline=True`` additionally accepts quoted embedded newlines --
     but makes files UNSPLITTABLE (one task per file, no intra-file
-    parallelism), so it's opt-in: the API-compat upload path uses it
-    (single bounded file), the 100 TB scan path must not.
+    parallelism), so it's opt-in; the 100 TB scan path must not use it.
+    The API upload path (``api.service.import_flatfile``) no longer
+    reads through here with ``multiline=True``: the request body is
+    already in driver memory, so it is parsed once with the reference's
+    own ``pd.read_csv`` call.
 
     Known limitation: NUL bytes (``\\x00``) inside QUOTED fields are
     stripped by Spark's uniVocity parser ('\\0' is its internal

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def ingest_append(
@@ -34,10 +34,6 @@ def ingest_append(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(path)
-
-
-def read_ingested(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def table_exists(path: str) -> bool:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_ingestion_tool_spark import catalog as catalog_mod
 from data_ingestion_tool_spark.api import (
     ApiError,
     ColumnSelection,
@@ -150,6 +151,110 @@ def test_import_empty_400(catalog):
     with pytest.raises(ApiError) as e:
         service.import_flatfile(catalog, CONN, "empty.csv", b"")
     assert e.value.status_code == 400
+
+
+RAGGED = b"a,b,c\n1,2,3\n4,5,6,7\n8,9\n"
+
+
+def test_import_ragged_row_500_nothing_written(catalog):
+    """A row with more fields than the header fails like the
+    reference's pandas parse (ParserError → 500); it is never repaired
+    by dropping the extra field, and no table is created or appended."""
+    with pytest.raises(ApiError) as e:
+        service.import_flatfile(catalog, CONN, "r.csv", RAGGED, table="svc_ragged_new")
+    assert e.value.status_code == 500
+    assert e.value.detail.startswith("Import failed: ")
+    assert not catalog.catalog.tableExists("svc_ragged_new")
+
+    service.import_flatfile(catalog, CONN, "ok.csv", b"a,b,c\n1,2,3\n", table="svc_ragged")
+    with pytest.raises(ApiError) as e:
+        service.import_flatfile(catalog, CONN, "r.csv", RAGGED, table="svc_ragged")
+    assert e.value.status_code == 500
+    assert catalog.table("svc_ragged").count() == 1
+    catalog.sql("DROP TABLE svc_ragged")
+
+
+def test_import_header_only_400(catalog):
+    with pytest.raises(ApiError) as e:
+        service.import_flatfile(catalog, CONN, "h.csv", b"a,b,c\n", table="svc_header_only")
+    assert e.value.status_code == 400
+    assert e.value.detail == "File is empty or invalid format"
+    assert not catalog.catalog.tableExists("svc_header_only")
+
+
+def test_import_short_row_pads_empty(catalog):
+    """A row with fewer fields than the header is padded with '', as
+    pandas does with ``na_filter=False``."""
+    out = service.import_flatfile(
+        catalog, CONN, "s.csv", b"a,b,c\n1,2,3\n8,9\n", table="svc_short_row"
+    )
+    assert out["count"] == 2
+    rows = {tuple(r) for r in catalog.table("svc_short_row").collect()}
+    assert rows == {("1", "2", "3"), ("8", "9", "")}
+    catalog.sql("DROP TABLE svc_short_row")
+
+
+def test_connect_lists_like_list_tables(catalog, monkeypatch):
+    """Same names, same order as ``spark.catalog.listTables()``: temp
+    views and persistent tables alike; the 1000-name cap still holds."""
+    catalog.createDataFrame([(1,)], "x int").write.mode("overwrite").saveAsTable("svc_persist")
+    catalog.createDataFrame([(1,)], "x int").createOrReplaceTempView("svc_view")
+    try:
+        expected = [t.name for t in catalog.catalog.listTables()]
+        assert {"svc_persist", "svc_view", "customer"} <= set(expected)
+        assert service.connect(catalog, CONN)["tables"] == expected
+        monkeypatch.setattr(catalog_mod, "MAX_LIST_TABLES", 2)
+        assert service.connect(catalog, CONN)["tables"] == expected[:2]
+    finally:
+        catalog.sql("DROP TABLE svc_persist")
+        catalog.catalog.dropTempView("svc_view")
+
+
+def _with_job_count(spark, group, call):
+    """``call()``'s result and the number of Spark jobs it ran, counted
+    from job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store fills in from the listener bus; drain it
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_endpoint_job_counts(catalog):
+    """Each request runs only the Spark jobs its answer needs: no job
+    to list or describe tables, one bounded collect per export and one
+    write per import, which adds exactly one Parquet file."""
+    table = "svc_jobs"
+    body = b"a,b\n" + b"".join(b"%d,x%d\n" % (i, i) for i in range(500))
+    for call in range(1, 3):
+        _, jobs = _with_job_count(
+            catalog, f"svc-import-{call}",
+            lambda: service.import_flatfile(catalog, CONN, "j.csv", body, table=table),
+        )
+        assert jobs <= 1
+        files = [f for f in catalog.table(table).inputFiles() if f.endswith(".parquet")]
+        assert len(files) == call
+    out, jobs = _with_job_count(catalog, "svc-connect", lambda: service.connect(catalog, CONN))
+    assert table in out["tables"] and jobs == 0
+    out, jobs = _with_job_count(
+        catalog, "svc-get-columns", lambda: service.get_columns(catalog, CONN, table)
+    )
+    assert out["count"] == 2 and jobs == 0
+    out, jobs = _with_job_count(
+        catalog, "svc-export",
+        lambda: service.export_flatfile(catalog, CONN, ColumnSelection(table, ["a", "b"])),
+    )
+    assert out["count"] == 1000 and jobs <= 1
+    empty = ColumnSelection(table, ["a"], join_tables=["customer"], join_condition="1 = 0")
+    out, jobs = _with_job_count(
+        catalog, "svc-export-empty", lambda: service.export_flatfile(catalog, CONN, empty)
+    )
+    assert out["message"] == "No data found" and jobs <= 1
+    catalog.sql(f"DROP TABLE {table}")
 
 
 def test_health(catalog):
