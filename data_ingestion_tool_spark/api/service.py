@@ -31,12 +31,16 @@ Spark-first differences (deliberate, documented):
   reference's first-writer-defines-schema, append-wins policy
   (``CREATE TABLE IF NOT EXISTS`` + insert, main.py:263-286). The upload
   body is already in driver memory, so it is parsed there once with the
-  reference's own pandas call and written as one Parquet file by one
-  Spark job; the 10k-row insert loop goes away.
+  reference's own pandas call and written from there as one Parquet
+  file into the table's directory (``sources.ingest.append_upload``);
+  the 10k-row insert loop goes away.
 
-Each request runs only the Spark jobs its answer needs: ``connect`` and
-``get_columns`` read the catalog without a job, ``export_flatfile`` runs
-one bounded collect and ``import_flatfile`` one write.
+Each request runs only the Spark jobs its answer needs: ``connect``,
+``get_columns`` and ``import_flatfile`` read or write through the
+session catalog without a job; ``export_flatfile`` runs one bounded
+collect, after whatever jobs its join needs (a broadcast comma-join
+adds one, to build the broadcast side); ``health`` runs its
+``SELECT 1``.
 """
 
 from __future__ import annotations
@@ -47,10 +51,10 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from ..catalog import list_tables, schema_to_columns
 from ..sources.csv_io import export_csv_rows, validate_upload_extension
+from ..sources.ingest import append_upload
 from .connector import route
 from .models import ColumnSelection, ConnectionInfo, build_export_dataframe
 
@@ -73,8 +77,8 @@ def connect(spark: SparkSession, conn: ConnectionInfo) -> dict[str, Any]:
     probe is capped at 1000 names like the reference's
     ``max_result_rows`` setting (main.py:102). When external routing is
     enabled (connector.route), the listing comes from the real server
-    ``conn`` names; otherwise from the session catalog
-    (:func:`catalog.list_tables`, no Spark job)."""
+    ``conn`` names; otherwise from the session catalog's memory
+    (:func:`catalog.list_tables`: no SQL command and no Spark job)."""
     try:
         be = route(conn)
         names = be.list_tables() if be is not None else list_tables(spark)
@@ -122,7 +126,8 @@ def export_flatfile(
     found" short-circuit (main.py:185-191), else CSV string with header
     = exactly the selected columns (BOM-less, matching the reference's
     actual response body — see csv_io.export_csv_rows). One bounded
-    collect answers both, so an export is one Spark job.
+    collect answers both: a single-table export is one Spark job, and a
+    broadcast comma-join adds one job to build its broadcast side.
 
     The ``query`` echo field reproduces the SQL text the reference
     would have generated (main.py:176-180) — the actual execution is
@@ -194,7 +199,10 @@ def import_flatfile(
     ``pd.read_csv(..., dtype=str, na_filter=False)``, so every column is
     a string, an empty cell stays ``''`` and a ragged row fails with
     pandas' ``ParserError`` (500) instead of being repaired. The rows
-    are written as one Parquet file by one Spark job.
+    are written from the driver as one Parquet file, without a Spark
+    job; an append that ``saveAsTable`` would refuse (column count or
+    names, a non-string column, a table that is not plain Parquet)
+    fails with 500 and writes nothing.
     """
     try:
         validate_upload_extension(filename)
@@ -219,12 +227,8 @@ def import_flatfile(
             count = be.insert_rows(table, columns, pdf.values.tolist())
         else:
             # append-wins / IF NOT EXISTS policy: first writer defines
-            # the schema; later ingests append (main.py:263-268).
-            # coalesce(1): createDataFrame slices a pandas frame into
-            # defaultParallelism partitions, one file each.
-            schema = T.StructType([T.StructField(c, T.StringType()) for c in columns])
-            df = spark.createDataFrame(pdf, schema).coalesce(1)
-            df.write.mode("append").format("parquet").saveAsTable(table)
+            # the schema; later ingests append (main.py:263-268)
+            append_upload(spark, pdf, table)
             count = len(pdf)  # inserted rows this call, like the reference
         return {
             "status": "success",

@@ -13,7 +13,9 @@ Re-expresses the reference's data movement surface
   :func:`write_csv` (distributed, for scale).
 - R8/R9 auto-create + batched append (main.py:249-286) ->
   :func:`ingest_append` (per-partition task writes replace the 10k-row
-  driver-side loop; first-writer-defines-schema append policy).
+  driver-side loop; first-writer-defines-schema append policy) and, for
+  an API upload already parsed on the driver, ``ingest.append_upload``
+  (one Parquet file into the catalog table, no Spark job).
 """
 
 from .csv_io import (

@@ -210,6 +210,135 @@ def test_connect_lists_like_list_tables(catalog, monkeypatch):
         catalog.catalog.dropTempView("svc_view")
 
 
+def _import_status(spark, body, table):
+    """The status code one import answers with."""
+    try:
+        service.import_flatfile(spark, CONN, "u.csv", body, table=table)
+    except ApiError as e:
+        return e.status_code
+    return 200
+
+
+def _rows_files(spark, table):
+    """(rows, Parquet files) of a persistent table, None when absent."""
+    if not spark.catalog.tableExists(table):
+        return None
+    df = spark.table(table)
+    return df.count(), len([f for f in df.inputFiles() if f.endswith(".parquet")])
+
+
+ABC = b"a,b,c\n1,2,3\n"
+
+
+@pytest.mark.parametrize(
+    "label, body", [("reordered", b"c,b,a\n3,2,1\n"), ("upper", b"A,B,C\n1,2,3\n")]
+)
+def test_import_appends_by_name(catalog, label, body):
+    """An upload whose header names the table's columns in another order
+    or case is appended column by column by name."""
+    table = f"svc_byname_{label}"
+    assert _import_status(catalog, ABC, table) == 200
+    try:
+        assert _import_status(catalog, body, table) == 200
+        assert _rows_files(catalog, table) == (2, 2)
+        assert catalog.table(table).columns == ["a", "b", "c"]
+        assert {tuple(r) for r in catalog.table(table).collect()} == {("1", "2", "3")}
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+@pytest.mark.parametrize(
+    "label, body",
+    [
+        ("fewer", b"a,b\n1,2\n"),
+        ("extra", b"a,b,c,d\n1,2,3,4\n"),
+        ("renamed", b"a,b,x\n1,2,3\n"),
+    ],
+)
+def test_import_mismatched_header_500_nothing_written(catalog, label, body):
+    table = f"svc_mismatch_{label}"
+    assert _import_status(catalog, ABC, table) == 200
+    try:
+        assert _import_status(catalog, body, table) == 500
+        assert _rows_files(catalog, table) == (1, 1)
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+@pytest.mark.parametrize(
+    "label, ddl",
+    [
+        ("int", "(a INT, b STRING) USING parquet"),  # CANNOT_SAFELY_CAST
+        ("partitioned", "(a STRING, b STRING) USING parquet PARTITIONED BY (b)"),
+        ("bucketed", "(a STRING, b STRING) USING parquet CLUSTERED BY (a) INTO 2 BUCKETS"),
+        ("csv", "(a STRING, b STRING) USING csv"),
+    ],
+)
+def test_import_into_incompatible_table_500(catalog, label, ddl):
+    """An existing table the all-string append cannot go into as it is
+    fails with 500 and stays empty."""
+    table = f"svc_target_{label}"
+    catalog.sql(f"CREATE TABLE {table} {ddl}")
+    try:
+        assert _import_status(catalog, b"a,b\n1,x\n", table) == 500
+        assert catalog.table(table).count() == 0
+        assert not [f for f in catalog.table(table).inputFiles() if f.endswith(".parquet")]
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+@pytest.mark.parametrize("kind, stored", [("char", "1  "), ("varchar", "1")])
+def test_import_into_char_varchar_table(catalog, kind, stored):
+    """A char(n)/varchar(n) target takes values of at most n characters
+    (char pads them to n); a longer value fails with nothing written."""
+    table = f"svc_target_{kind}"
+    catalog.sql(f"CREATE TABLE {table} (a {kind.upper()}(3), b STRING) USING parquet")
+    try:
+        assert _import_status(catalog, b"a,b\n1,x\n", table) == 200
+        assert _import_status(catalog, b"a,b\n1234,x\n", table) == 500
+        assert _rows_files(catalog, table) == (1, 1)
+        assert [tuple(r) for r in catalog.table(table).collect()] == [(stored, "x")]
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def test_import_case_duplicate_header_500_no_table(catalog):
+    """``A,a`` names one column twice under case-insensitive resolution."""
+    assert _import_status(catalog, b"A,a\n1,2\n", "svc_dup_case") == 500
+    assert not catalog.catalog.tableExists("svc_dup_case")
+
+
+def test_import_beside_temp_view(catalog):
+    """A temp view with the target's name shadows it for readers, but an
+    import creates and then appends the persistent table of that name
+    in the current database and leaves the view alone."""
+    catalog.createDataFrame([(9,)], "x int").createOrReplaceTempView("svc_shadow")
+    try:
+        for call in (1, 2):
+            assert _import_status(catalog, b"a,b\n1,2\n", "svc_shadow") == 200
+            assert _rows_files(catalog, "default.svc_shadow") == (call, call)
+        assert [tuple(r) for r in catalog.table("svc_shadow").collect()] == [(9,)]
+    finally:
+        catalog.catalog.dropTempView("svc_shadow")
+        catalog.sql("DROP TABLE default.svc_shadow")
+
+
+def test_import_odd_headers_roundtrip(catalog):
+    """A header with a space, an empty name and a duplicate imports under
+    pandas' names, and an export returns them."""
+    out = service.import_flatfile(
+        catalog, CONN, "o.csv", b"my col,,a,a\n1,2,3,4\n", table="svc_odd"
+    )
+    try:
+        assert out["columns"] == ["my col", "Unnamed: 1", "a", "a.1"]
+        assert _rows_files(catalog, "svc_odd") == (1, 1)
+        sel = ColumnSelection("svc_odd", ["my col", "Unnamed: 1", "a", "`a.1`"])
+        exported = service.export_flatfile(catalog, CONN, sel)
+        assert exported["data"] == "my col,Unnamed: 1,a,a.1\n1,2,3,4\n"
+    finally:
+        catalog.sql("DROP TABLE svc_odd")
+
+
 def _with_job_count(spark, group, call):
     """``call()``'s result and the number of Spark jobs it ran, counted
     from job group ``group``."""
@@ -226,8 +355,10 @@ def _with_job_count(spark, group, call):
 
 def test_endpoint_job_counts(catalog):
     """Each request runs only the Spark jobs its answer needs: no job
-    to list or describe tables, one bounded collect per export and one
-    write per import, which adds exactly one Parquet file."""
+    to list or describe tables or to import an upload, which adds
+    exactly one Parquet file; one bounded collect per single-table
+    export, and a comma-join export first broadcasts its build side
+    (the empty join is optimized away, leaving the collect)."""
     table = "svc_jobs"
     body = b"a,b\n" + b"".join(b"%d,x%d\n" % (i, i) for i in range(500))
     for call in range(1, 3):
@@ -235,7 +366,7 @@ def test_endpoint_job_counts(catalog):
             catalog, f"svc-import-{call}",
             lambda: service.import_flatfile(catalog, CONN, "j.csv", body, table=table),
         )
-        assert jobs <= 1
+        assert jobs == 0
         files = [f for f in catalog.table(table).inputFiles() if f.endswith(".parquet")]
         assert len(files) == call
     out, jobs = _with_job_count(catalog, "svc-connect", lambda: service.connect(catalog, CONN))
@@ -248,13 +379,25 @@ def test_endpoint_job_counts(catalog):
         catalog, "svc-export",
         lambda: service.export_flatfile(catalog, CONN, ColumnSelection(table, ["a", "b"])),
     )
-    assert out["count"] == 1000 and jobs <= 1
+    assert out["count"] == 1000 and jobs == 1
+    join = ColumnSelection(
+        table, ["a", "c_name"], join_tables=["customer"], join_condition="a = c_custkey"
+    )
+    out, jobs = _with_job_count(
+        catalog, "svc-export-join", lambda: service.export_flatfile(catalog, CONN, join)
+    )
+    assert out["count"] > 0 and jobs == 2
     empty = ColumnSelection(table, ["a"], join_tables=["customer"], join_condition="1 = 0")
     out, jobs = _with_job_count(
         catalog, "svc-export-empty", lambda: service.export_flatfile(catalog, CONN, empty)
     )
-    assert out["message"] == "No data found" and jobs <= 1
+    assert out["message"] == "No data found" and jobs == 1
     catalog.sql(f"DROP TABLE {table}")
+
+
+def test_list_tables_unknown_db_raises(catalog):
+    with pytest.raises(Exception, match="SCHEMA_NOT_FOUND"):
+        catalog_mod.list_tables(catalog, "svc_no_such_db")
 
 
 def test_health(catalog):
