@@ -107,6 +107,32 @@ def test_cosine_topk_self_similarity(spark):
     assert not any(r["neighbor_id"] == 1 for r in out)  # self excluded
 
 
+@pytest.mark.parametrize("n_parts", [1, 3, 7])
+def test_cosine_topk_ties_keep_documented_order_under_any_partitioning(
+    spark, n_parts
+):
+    """More than k neighbours tie at score 1.0: the answer is the k
+    smallest neighbor_ids (score desc, neighbor_id asc), however the
+    corpus is partitioned into batches."""
+    k = 4
+    direction = [0.0, 0.0, 2.0, 0.0]
+    collinear = list(range(5, 70, 4))  # 16 ids, > k
+    rows = [(1, direction)]
+    for i, vid in enumerate(collinear):
+        # power-of-two multiples normalise to the query's exact unit vector
+        rows.append((vid, [x * 2.0 ** (i % 7 - 3) for x in direction]))
+    for vid in range(2, 80):
+        if vid not in collinear:
+            axis = (0, 1, 3)[vid % 3]
+            rows.append((vid, [float(vid) if j == axis else 0.0 for j in range(4)]))
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    out = SIM.cosine_topk(
+        emb.repartition(n_parts), emb.filter("vec_id = 1"), k=k
+    ).collect()
+    got = sorted((r["rank"], r["neighbor_id"], r["score"]) for r in out)
+    assert got == [(i + 1, vid, 1.0) for i, vid in enumerate(collinear[:k])]
+
+
 def test_union_all_count_additivity(spark, sf_dir):
     from data_ingestion_tool_spark.sources.parquet_io import read_table
 
