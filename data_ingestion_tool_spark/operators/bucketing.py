@@ -21,6 +21,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import persistent_table
 from ..sources.parquet_io import read_table
 
 
@@ -52,11 +53,15 @@ def ensure_bucketed(
     existing layout)."""
     tag = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     name = f"{table}_bkt{buckets}_{tag}"
-    if not spark.catalog.tableExists(name):
+    _, meta = persistent_table(spark, name)
+    if meta is None or not meta.bucketed:
         # the in-memory catalog dies with the session but the warehouse
-        # dir survives — clear an orphaned location or saveAsTable
-        # raises LOCATION_ALREADY_EXISTS (with a real metastore the
-        # tableExists check alone is the idempotence)
+        # dir survives: a session from get_spark registers it again as
+        # plain Parquet, another session leaves it orphaned. Drop and
+        # clear either, or saveAsTable raises LOCATION_ALREADY_EXISTS
+        # (with a real metastore the bucketed check alone is the
+        # idempotence)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
         wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         leftover = Path(wh) / name
         if leftover.exists():

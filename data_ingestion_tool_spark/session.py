@@ -15,115 +15,92 @@ here so every entry point (tests, bench, driver) runs the same way:
 - Session timezone pinned UTC so timestamp semantics are stable across
   driver/executors and match the DuckDB oracle.
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
+
+Scratch the engine writes on its own account (streaming checkpoints,
+sink outputs, the default warehouse) lives under one root per process,
+:func:`scratch_base`, removed at normal exit; a killed process leaves
+its root on disk. The ``SPARK_GRAFT_*`` variables set deployment sizes
+and paths; without ``SPARK_GRAFT_LOCAL_DIR`` Spark picks its own
+``spark.local.dir``.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def _default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    return f"local[{cpus}]"
-
-
-# Minimum free bytes before /dev/shm is elected for shuffle scratch.
-# Docker's default /dev/shm is 64 MB — shuffle spill there dies with
-# ENOSPC mid-query, and a RAM-backed dir competes with executor memory;
-# only elect tmpfs when it demonstrably has headroom (sf0.1 shuffle data
-# is tens of MB; 4 GB leaves >100x margin and excludes every
-# small-tmpfs container default).
-_SHM_MIN_FREE_BYTES = 4 * 1024**3
-
-
-def _default_local_dir() -> str:
-    env = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if env:
-        return env
-    shm = "/dev/shm"
-    try:
-        st = os.statvfs(shm)
-        if os.path.isdir(shm) and st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
-            return f"{shm}/spark-graft-local"
-    except OSError:
-        pass
-    return "/tmp"
-
-
+@functools.cache
 def scratch_base() -> str:
-    """Root for ENGINE SCRATCH — streaming checkpoints, sink-roundtrip
-    outputs, partitioned-write fixtures. Same tmpfs election (and 4 GB
-    capacity gate) as :func:`_default_local_dir`: local-mode fsync
-    throughput on whatever disk backs /tmp varies ~3x across host
-    boots, and streaming state checkpoints + small-file sinks are
-    exactly the fsync-heavy pattern that absorbed that lottery (the
-    round-10 spark.local.dir finding, applied to the remaining disk
-    paths in round 13). A real deployment pins checkpoints to durable
-    shared storage — this is local TEST scratch placement, overridable
-    via ``SPARK_GRAFT_SCRATCH_DIR``."""
-    env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    if env:
-        return env
-    shm = "/dev/shm"
-    try:
-        st = os.statvfs(shm)
-        if os.path.isdir(shm) and st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
-            return f"{shm}/spark-graft-scratchfs"
-    except OSError:
-        pass
-    import tempfile
-
-    return tempfile.gettempdir()
-
-
-# Scratch checkpoints older than this are prunable: no bench/verify/test
-# stream runs longer than a few minutes; 1h leaves a 20x margin.
-_CKPT_TTL_SEC = 3600
+    """This process's scratch root, made by the first call under
+    ``$SPARK_GRAFT_SCRATCH_DIR`` (else the temp directory) and removed at
+    normal interpreter exit; a killed process leaves it on disk. Made
+    lazily, so Python workers, which import the engine, make none."""
+    parent = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or None
+    root = tempfile.mkdtemp(prefix="spark-graft-", dir=parent)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def ckpt_dir(prefix: str) -> str:
-    """Fresh streaming-checkpoint dir under the scratch base, pruning
-    SIBLING checkpoints older than the TTL first (same leak discipline
-    as the sink-scratch helper: on a tmpfs base, leaked state stores
-    would otherwise accumulate in RAM across bench runs). Dirs made by
-    THIS process are never pruned."""
-    import time
-    import uuid
+    """A fresh streaming-checkpoint path under ``<root>/ckpt``. It goes
+    with the root at exit, so a stream that must resume in a later
+    process passes a checkpoint path of its own."""
+    return os.path.join(scratch_base(), "ckpt", f"{prefix}-{uuid.uuid4().hex}")
 
-    root = os.path.join(scratch_base(), "spark-graft-ckpt")
-    now = time.time()
-    tag = f"-pid{os.getpid()}-"
-    try:
-        for entry in os.scandir(root):
-            if tag in entry.name:
-                continue
-            try:
-                # A LIVE stream keeps touching its checkpoint tree
-                # (offsets/commits/state get a file per micro-batch), so
-                # judge liveness by the newest mtime across the dir and
-                # its immediate children — the top-level dir's own mtime
-                # goes stale once the layout exists. This protects a
-                # concurrent soak run streaming past the TTL, and pid
-                # reuse across boots can no longer claim a live dir
-                # (round-13 ADVICE).
-                newest = entry.stat().st_mtime
-                if entry.is_dir():
-                    with os.scandir(entry.path) as kids:
-                        for kid in kids:
-                            newest = max(newest, kid.stat().st_mtime)
-                if now - newest > _CKPT_TTL_SEC:
-                    import shutil
 
-                    shutil.rmtree(entry.path, ignore_errors=True)
-            except OSError:
-                continue
-    except OSError:
-        pass
-    return os.path.join(root, f"{prefix}{tag}{uuid.uuid4().hex}")
+def _conf(master: str | None, shuffle_partitions: int | None) -> dict[str, str]:
+    conf = {
+        "spark.master": master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        # per process: sessions sharing one warehouse race on overwrites
+        "spark.sql.warehouse.dir": os.environ.get("SPARK_GRAFT_WAREHOUSE")
+        or os.path.join(scratch_base(), "warehouse"),
+    }
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir:
+        conf["spark.local.dir"] = local_dir
+    return conf
+
+
+def _register_warehouse_tables(spark: SparkSession) -> None:
+    """Register each table directory of a local warehouse that the
+    default database lacks: the in-memory catalog starts empty, so a
+    reused warehouse would list nothing and re-creating a table would
+    fail with ``LOCATION_ALREADY_EXISTS``. Tables come back as external
+    Parquet (schema read from the files, one Spark job each; bucket and
+    partition specs are lost; ``DROP TABLE`` keeps the files). A
+    directory without a data file has no schema and is left alone."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    if not os.path.isdir(warehouse):
+        return
+    with os.scandir(warehouse) as entries:
+        tables = [e for e in entries if e.is_dir() and not e.name.startswith(("_", "."))]
+    for entry in tables:
+        table = "default.`" + entry.name.replace("`", "``") + "`"
+        if (
+            not entry.name.endswith(".db")
+            and not spark.catalog.tableExists(table)
+            and any(not f.startswith(("_", ".")) for f in os.listdir(entry.path))
+        ):
+            spark.catalog.createTable(table, path=entry.path, source="parquet")
 
 
 def get_spark(
@@ -132,52 +109,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the shared SparkSession with engine defaults."""
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or _default_master())
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        # per-process warehouse: two concurrent sessions (pytest + a
-        # verify/bench run) sharing one dir race on managed-table
-        # overwrites — reader hits FILE_NOT_EXIST mid-scan. A real
-        # deployment uses a shared metastore with atomic commits; the
-        # local in-memory catalog has no such protocol, so isolate.
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE",
-                os.path.join(
-                    scratch_base(), f"spark-graft-warehouse-{os.getpid()}"
-                ),
-            ),
-        )
-        # Shuffle/spill scratch on tmpfs when available: local-mode
-        # shuffle writes otherwise land on whatever disk /tmp happens
-        # to be, and measured fdatasync throughput varies ~3x across
-        # host boots — shuffle-bound queries (TPC-H joins) absorbed a
-        # 2-3x timing lottery with IDENTICAL plans (round 10; the
-        # scan-bound sentinel never moved). At sf0.1 shuffle data is
-        # tens of MB against a 126 GB tmpfs; a real cluster pins
-        # spark.local.dir to local NVMe for exactly the same reason.
-        # Capacity-gated: small-tmpfs hosts (Docker's 64 MB default)
-        # fall back to /tmp instead of ENOSPC'ing mid-shuffle.
-        .config("spark.local.dir", _default_local_dir())
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    """Build (or fetch) the shared SparkSession with engine defaults and
+    the warehouse's tables registered."""
+    conf = {**_conf(master, shuffle_partitions), **(extra_conf or {})}
+    spark = SparkSession.builder.appName(app_name).config(map=conf).getOrCreate()
+    _register_warehouse_tables(spark)
+    return spark
 
 
 def apply_session_defaults(spark: SparkSession) -> SparkSession:

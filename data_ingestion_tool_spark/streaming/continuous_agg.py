@@ -31,8 +31,6 @@ answer over everything ingested.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -18,8 +18,6 @@ is the restart token.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -15,7 +15,6 @@ streaming state store, late data dropped past the watermark.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
