@@ -37,10 +37,17 @@ Spark-first differences (deliberate, documented):
 
 Each request runs only the Spark jobs its answer needs: ``connect``,
 ``get_columns`` and ``import_flatfile`` read or write through the
-session catalog without a job; ``export_flatfile`` runs one bounded
-collect, after whatever jobs its join needs (a broadcast comma-join
-adds one, to build the broadcast side); ``health`` runs its
-``SELECT 1``.
+session catalog without a job. A single-table ``export_flatfile`` of
+plain string columns from a persistent, unpartitioned, unbucketed
+Parquet table on a local filesystem reads that table's files on the
+driver without a job (``sources.ingest.read_columns``). Every other
+export runs one bounded collect, after whatever jobs its join needs (a
+broadcast comma-join adds one, to build the broadcast side): a join, a
+temp view, a non-string or ``char``/``varchar`` column, a partitioned,
+bucketed or non-Parquet table, a location that is not ``file:`` or
+that holds a subdirectory, a nested or qualified column name, and a
+table with several files of which one is big enough for Spark to split.
+``health`` runs its ``SELECT 1``.
 """
 
 from __future__ import annotations
@@ -53,8 +60,9 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from ..catalog import list_tables, schema_to_columns
-from ..sources.csv_io import export_csv_rows, validate_upload_extension
-from ..sources.ingest import append_upload
+from ..sources import csv_io
+from ..sources.csv_io import csv_text, export_csv_rows, validate_upload_extension
+from ..sources.ingest import append_upload, read_columns
 from .connector import route
 from .models import ColumnSelection, ConnectionInfo, build_export_dataframe
 
@@ -125,16 +133,24 @@ def export_flatfile(
     """Query → inline CSV (main.py:163-208): the zero-row "No data
     found" short-circuit (main.py:185-191), else CSV string with header
     = exactly the selected columns (BOM-less, matching the reference's
-    actual response body — see csv_io.export_csv_rows). One bounded
-    collect answers both: a single-table export is one Spark job, and a
-    broadcast comma-join adds one job to build its broadcast side.
+    actual response body — see csv_io.export_csv_rows).
+
+    A single-table export reads the table's Parquet files on the driver
+    where ``sources.ingest.read_columns`` can be sure of Spark's answer
+    (plain string columns of a persistent, unpartitioned, unbucketed
+    local Parquet table; see the module docstring), and runs no Spark
+    job. Otherwise one bounded collect of the DataFrame plan answers
+    both: one Spark job, and a broadcast comma-join adds one job to
+    build its broadcast side. Both apply the same row bound
+    (``csv_io.EXPORT_MAX_ROWS``, 500 over it) and the same ``to_csv``.
 
     The ``query`` echo field reproduces the SQL text the reference
     would have generated (main.py:176-180) — the actual execution is
     the Catalyst-planned DataFrame, not this string.
     """
     query = f"SELECT {', '.join(selection.columns)} FROM {selection.table}"
-    if selection.join_tables and selection.join_condition:
+    joined = bool(selection.join_tables and selection.join_condition)
+    if joined:
         tables_str = ", ".join([selection.table, *selection.join_tables])
         query = (
             f"SELECT {', '.join(selection.columns)} FROM {tables_str} "
@@ -167,7 +183,13 @@ def export_flatfile(
         # row count from the collected frame, like the reference's
         # len(result_rows) — counting '\n' in the CSV overcounts when
         # field values carry quoted embedded newlines
-        csv_data, count = export_csv_rows(build_export_dataframe(spark, selection))
+        pdf = None if joined else read_columns(
+            spark, selection.table, selection.columns, csv_io.EXPORT_MAX_ROWS
+        )
+        if pdf is None:
+            csv_data, count = export_csv_rows(build_export_dataframe(spark, selection))
+        else:
+            csv_data, count = csv_text(pdf), len(pdf)
         if count == 0:
             return {"status": "success", "data": "", "count": 0,
                     "message": "No data found"}

@@ -11,12 +11,15 @@ footer schema — still metadata-only, no data scan.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 MAX_LIST_TABLES = 1000  # reference main.py:102 max_result_rows
+# field metadata that marks a string column as char(n) or varchar(n)
+CHAR_VARCHAR_KEY = "__CHAR_VARCHAR_TYPE_STRING"
 
 
 class TableNotFoundError(KeyError):
@@ -27,6 +30,11 @@ def _session_catalog(spark: SparkSession):
     """The JVM ``SessionCatalog``: it answers from catalog memory, with
     no SQL to parse or plan and no Spark job."""
     return spark._jsparkSession.sessionState().catalog()
+
+
+def _table_identifier(spark: SparkSession, name: str):
+    """``name`` parsed as SQL parses a table name; raises if malformed."""
+    return spark._jsparkSession.sessionState().sqlParser().parseTableIdentifier(name)
 
 
 def list_tables(spark: SparkSession, db: str | None = None) -> list[str]:
@@ -52,6 +60,12 @@ class TableMetadata:
     bucketed: bool
     schema: T.StructType
 
+    @property
+    def plain_parquet(self) -> bool:
+        """An unpartitioned, unbucketed Parquet table: its rows are the
+        Parquet files directly in :attr:`location`."""
+        return self.provider.lower() == "parquet" and not (self.partitioned or self.bucketed)
+
 
 def persistent_table(spark: SparkSession, name: str) -> tuple[str, TableMetadata | None]:
     """``name`` as ``saveAsTable`` resolves it, and its metadata.
@@ -62,9 +76,7 @@ def persistent_table(spark: SparkSession, name: str) -> tuple[str, TableMetadata
     metadata, or ``None`` when no such persistent table exists.
     A malformed name or an unknown database raises. No Spark job."""
     sc = _session_catalog(spark)
-    ident = sc.qualifyIdentifier(
-        spark._jsparkSession.sessionState().sqlParser().parseTableIdentifier(name)
-    )
+    ident = sc.qualifyIdentifier(_table_identifier(spark, name))
     qualified = ".".join(
         "`" + part.replace("`", "``") + "`" for part in (ident.database().get(), ident.table())
     )
@@ -79,6 +91,39 @@ def persistent_table(spark: SparkSession, name: str) -> tuple[str, TableMetadata
         bucketed=t.bucketSpec().isDefined(),
         schema=T._parse_datatype_json_string(t.schema().json()),
     )
+
+
+def temp_view_exists(spark: SparkSession, name: str) -> bool:
+    """Whether ``name`` is a temp view, which ``spark.table(name)``
+    reads in place of a persistent table of that name. No Spark job."""
+    return _session_catalog(spark).isTempView(_table_identifier(spark, name))
+
+
+def case_sensitive(spark: SparkSession) -> bool:
+    return spark.conf.get("spark.sql.caseSensitive") == "true"
+
+
+def resolve_column(name: str, names: Sequence[str], exact_case: bool) -> int:
+    """Position of the one entry of ``names`` that column ``name``
+    resolves to, the way Spark matches a column by name: equal, or
+    equal ignoring case unless ``exact_case`` (the session's
+    :func:`case_sensitive`). Raises ``ValueError`` unless exactly one
+    entry matches."""
+    key = (lambda c: c) if exact_case else str.lower
+    hits = [i for i, c in enumerate(names) if key(c) == key(name)]
+    if len(hits) != 1:
+        raise ValueError(f"Cannot resolve '{name}' given input columns: {list(names)}")
+    return hits[0]
+
+
+def string_rule(field: T.StructField) -> str | None:
+    """``"string"`` for a plain string column, its ``char(n)`` or
+    ``varchar(n)`` rule for a char/varchar one (Spark stores those as
+    strings and marks them with :data:`CHAR_VARCHAR_KEY`), ``None``
+    for any other type."""
+    if not isinstance(field.dataType, T.StringType):
+        return None
+    return field.metadata.get(CHAR_VARCHAR_KEY, "string")
 
 
 def table_exists(spark: SparkSession, name: str) -> bool:

@@ -10,9 +10,7 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,35 +28,13 @@ from .registry import dsum, query, sql_dsum
 from ..session import scratch_base
 
 
-_SCRATCH_TTL_SECONDS = 2 * 3600
-_SCRATCH_OWNED: set[str] = set()
-
-
 def _scratch(name: str) -> str:
-    """Unique scratch dir for a sink/roundtrip query.
-
-    The caller returns a LAZY DataFrame over the scratch path, so the
-    query itself can never clean up — instead each call best-effort
-    prunes SIBLING dirs older than the TTL (without this, repeated
-    bench/verify runs leak hundreds of dirs). Dirs created by THIS
-    process are never pruned, however old: a long session may lazily
-    re-evaluate a DataFrame hours after its scratch was written.
-    Residual risk is confined to a >TTL-old dir of another STILL-LIVE
-    process re-evaluating late — acceptable for test scratch."""
-    root = os.path.join(scratch_base(), "spark-graft-scratch")
-    now = time.time()
-    try:
-        for entry in os.scandir(root):
-            if (
-                entry.path not in _SCRATCH_OWNED
-                and now - entry.stat().st_mtime > _SCRATCH_TTL_SECONDS
-            ):
-                shutil.rmtree(entry.path, ignore_errors=True)
-    except OSError:
-        pass
-    d = os.path.join(root, f"{name}-{uuid.uuid4().hex[:8]}")
+    """Unique scratch dir for a sink/roundtrip query, under this
+    process's own scratch root (``session.scratch_base``), which is
+    removed at normal exit. The caller returns a LAZY DataFrame over
+    the path, so the query itself never cleans up."""
+    d = os.path.join(scratch_base(), "spark-graft-scratch", f"{name}-{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
-    _SCRATCH_OWNED.add(d)
     return d
 
 
@@ -2332,7 +2308,6 @@ def ingest_corrupt_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored after — silent row loss is NOT an acceptable default
     (quality_partition_checksums is the audit that would catch it)."""
     import os
-    import tempfile
     import uuid
 
     o = read_table(spark, sf_dir, "orders").select(
@@ -2408,7 +2383,6 @@ def ingest_text_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: text read/write are splittable distributed scans;
     parse is a codegen split projection; the rollup map-side combines."""
     import os
-    import tempfile
     d = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )

@@ -9,8 +9,14 @@ Re-expresses the reference's data movement surface
   type-mapping at main.py:250-256 *intended*).
 - R6 CSV export (``df.to_csv(index=False, encoding='utf-8-sig')``,
   main.py:193-194) -> :func:`export_csv_rows` (bounded, API-compatible,
-  BOM-less like the reference's actual str response) and
-  :func:`write_csv` (distributed, for scale).
+  BOM-less like the reference's actual str response; one Spark job)
+  and :func:`write_csv` (distributed, for scale). A single-table API
+  export of plain string columns from a persistent, unpartitioned,
+  unbucketed Parquet table on a local filesystem reads the table's
+  files on the driver instead, under the same bound and ``to_csv``
+  (``ingest.read_columns``, no Spark job); a join, a temp view, any
+  other column type or table layout, or a location that is not
+  ``file:`` goes through :func:`export_csv_rows`.
 - R8/R9 auto-create + batched append (main.py:249-286) ->
   :func:`ingest_append` (per-partition task writes replace the 10k-row
   driver-side loop; first-writer-defines-schema append policy) and, for

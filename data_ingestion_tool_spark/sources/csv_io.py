@@ -19,14 +19,17 @@ Scale note: :func:`read_csv_compat`/:func:`read_csv_inferred` are
 distributed scans (executors read splits — the reference's
 whole-file-into-backend-memory at main.py:233 is gone).
 :func:`export_csv_rows` intentionally collects (it reproduces the
-reference's inline-response API) with an enforced row bound;
-:func:`write_csv` is the scale path.
+reference's inline-response API) with an enforced row bound, in one
+Spark job; the API's single-table export of a local plain-Parquet
+string table skips that job and reads the files on the driver under
+the same bound (:func:`check_export_rows`) and ``to_csv``
+(:func:`csv_text`), see ``ingest.read_columns``. :func:`write_csv` is
+the scale path.
 """
 
 from __future__ import annotations
 
-import io
-
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -133,7 +136,7 @@ EXPORT_MAX_ROWS = 100_000
 def export_csv_rows(
     df: DataFrame,
     columns: list[str] | None = None,
-    max_rows: int = EXPORT_MAX_ROWS,
+    max_rows: int | None = None,
 ) -> tuple[str, int]:
     """API-compatible inline export → ``(csv_string, row_count)``.
 
@@ -144,26 +147,36 @@ def export_csv_rows(
     do we (behavior over documented intent).
 
     Collects to the driver, so the bound is ENFORCED: more than
-    ``max_rows`` result rows raises ``ValueError`` (the API layer maps
-    it to a 500, mirroring the reference's implicit inline-response
-    ceiling at main.py:233). The unbounded path is :func:`write_csv`.
+    ``max_rows`` (default :data:`EXPORT_MAX_ROWS`) result rows raises
+    ``ValueError`` (the API layer maps it to a 500, mirroring the
+    reference's implicit inline-response ceiling at main.py:233). The
+    unbounded path is :func:`write_csv`.
     """
+    max_rows = EXPORT_MAX_ROWS if max_rows is None else max_rows
     bounded = df.select(*columns) if columns else df
     pdf = bounded.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows:
+    check_export_rows(len(pdf), max_rows)
+    return csv_text(pdf), len(pdf)
+
+
+def check_export_rows(rows: int, max_rows: int) -> None:
+    """The inline export's row bound: raises ``ValueError`` over it."""
+    if rows > max_rows:
         raise ValueError(
             f"inline CSV export exceeds max_rows={max_rows}; "
             "use write_csv() for unbounded results"
         )
-    buf = io.StringIO()
-    pdf.to_csv(buf, index=False)
-    return buf.getvalue(), len(pdf)
+
+
+def csv_text(pdf: pd.DataFrame) -> str:
+    """``pdf`` as the export's CSV text: header, no index, no BOM."""
+    return pdf.to_csv(index=False)
 
 
 def export_csv_string(
     df: DataFrame,
     columns: list[str] | None = None,
-    max_rows: int = EXPORT_MAX_ROWS,
+    max_rows: int | None = None,
 ) -> str:
     """String-only variant of :func:`export_csv_rows`."""
     return export_csv_rows(df, columns, max_rows)[0]

@@ -4,6 +4,10 @@ backed by Spark instead of ClickHouse."""
 
 from __future__ import annotations
 
+import os
+import uuid
+from urllib.parse import unquote, urlsplit
+
 import pytest
 
 from data_ingestion_tool_spark import catalog as catalog_mod
@@ -13,6 +17,8 @@ from data_ingestion_tool_spark.api import (
     ConnectionInfo,
 )
 from data_ingestion_tool_spark.api import service
+from data_ingestion_tool_spark.api.models import build_export_dataframe
+from data_ingestion_tool_spark.sources import csv_io
 
 
 @pytest.fixture(scope="module")
@@ -356,9 +362,11 @@ def _with_job_count(spark, group, call):
 def test_endpoint_job_counts(catalog):
     """Each request runs only the Spark jobs its answer needs: no job
     to list or describe tables or to import an upload, which adds
-    exactly one Parquet file; one bounded collect per single-table
-    export, and a comma-join export first broadcasts its build side
-    (the empty join is optimized away, leaving the collect)."""
+    exactly one Parquet file; no job to export from a persistent string
+    table, whose files are read on the driver; one bounded collect to
+    export from a temp view, and a comma-join export first broadcasts
+    its build side (the empty join is optimized away, leaving the
+    collect)."""
     table = "svc_jobs"
     body = b"a,b\n" + b"".join(b"%d,x%d\n" % (i, i) for i in range(500))
     for call in range(1, 3):
@@ -379,6 +387,13 @@ def test_endpoint_job_counts(catalog):
         catalog, "svc-export",
         lambda: service.export_flatfile(catalog, CONN, ColumnSelection(table, ["a", "b"])),
     )
+    assert out["count"] == 1000 and jobs == 0
+    catalog.table(table).createOrReplaceTempView("svc_jobs_view")
+    out, jobs = _with_job_count(
+        catalog, "svc-export-view",
+        lambda: service.export_flatfile(catalog, CONN, ColumnSelection("svc_jobs_view", ["a"])),
+    )
+    catalog.catalog.dropTempView("svc_jobs_view")
     assert out["count"] == 1000 and jobs == 1
     join = ColumnSelection(
         table, ["a", "c_name"], join_tables=["customer"], join_condition="a = c_custkey"
@@ -393,6 +408,210 @@ def test_endpoint_job_counts(catalog):
     )
     assert out["message"] == "No data found" and jobs == 1
     catalog.sql(f"DROP TABLE {table}")
+
+
+def _location(spark, table):
+    """Local directory of a persistent table."""
+    _, meta = catalog_mod.persistent_table(spark, table)
+    return unquote(urlsplit(meta.location).path)
+
+
+def _data_sizes(spark, table):
+    """Sizes of a table's Parquet files, in listing order."""
+    return [e.stat().st_size for e in os.scandir(_location(spark, table)) if e.name.endswith(".parquet")]
+
+
+def _import_files(spark, table, uploads):
+    """One import, so one Parquet file, per upload body."""
+    for body in uploads:
+        assert _import_status(spark, body, table) == 200
+
+
+def _export_jobs(spark, sel):
+    """The export response (or its ApiError) and its Spark job count."""
+
+    def call():
+        try:
+            return service.export_flatfile(spark, CONN, sel)
+        except ApiError as e:
+            return e
+
+    return _with_job_count(spark, f"svc-{uuid.uuid4().hex}", call)
+
+
+def _assert_same_as_spark(spark, sel):
+    """The export reads on the driver, without a Spark job, and answers
+    what one bounded collect of the DataFrame plan answers."""
+    out, jobs = _export_jobs(spark, sel)
+    assert jobs == 0
+    data, count = csv_io.export_csv_rows(build_export_dataframe(spark, sel))
+    assert out["count"] == count
+    if count:
+        assert out["data"] == data
+    else:
+        assert out["data"] == "" and out["message"] == "No data found"
+    return out
+
+
+def _rows(tag, n, width=1):
+    return b"".join(b"%s%0*d,v%s%d\n" % (tag, width, i, tag, i % 10) for i in range(n))
+
+
+def test_export_parity_files_of_distinct_sizes(catalog):
+    """Rows come file by file, largest first; hidden and empty files
+    are skipped, as Spark's listing skips them."""
+    table = "svc_parity_sizes"
+    _import_files(catalog, table, [b"a,b\n" + _rows(t, n) for t, n in
+                                   [(b"p", 3), (b"q", 9), (b"r", 5), (b"s", 2)]])
+    try:
+        open(os.path.join(_location(catalog, table), "part-empty.parquet"), "wb").close()
+        open(os.path.join(_location(catalog, table), "_SUCCESS"), "wb").close()
+        catalog.catalog.refreshTable(table)
+        sizes = _data_sizes(catalog, table)
+        assert len(set(sizes)) == 5 and 0 in sizes
+        out = _assert_same_as_spark(catalog, ColumnSelection(table, ["b", "a"]))
+        assert out["count"] == 19
+        files = dict.fromkeys(row.split(",")[1][0] for row in out["data"].splitlines()[1:])
+        assert "".join(files) == "qrps"
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def test_export_parity_files_of_equal_sizes(catalog):
+    """Files of one size come in listing order, as in Spark's scan."""
+    table = "svc_parity_equal"
+    _import_files(catalog, table, [b"a,b\n" + _rows(t, 4, 3) for t in (b"k", b"m", b"n", b"j")])
+    try:
+        sizes = _data_sizes(catalog, table)
+        assert len(sizes) == 4 and len(set(sizes)) == 1
+        _assert_same_as_spark(catalog, ColumnSelection(table, ["a", "b"]))
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+@pytest.mark.parametrize(
+    "columns, header",
+    [(["A", "B"], "A,B"), (["`a`", "`B`", "b"], "a,B,b"), (["B"], "B")],
+)
+def test_export_parity_names_by_case_and_backticks(catalog, columns, header):
+    """A name resolves ignoring case and may be backticked; the header
+    is the name as parsed, as Spark prints it. A file Spark wrote, with
+    a null, reads like the imported ones."""
+    table = "svc_parity_names"
+    _import_files(catalog, table, [b"a,b\n" + _rows(b"x", 3), b"a,b\n" + _rows(b"y", 2)])
+    catalog.sql(f"INSERT INTO {table} VALUES (NULL, 'z'), ('w', NULL)")
+    try:
+        out = _assert_same_as_spark(catalog, ColumnSelection(table, columns))
+        assert out["data"].splitlines()[0] == header
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def test_export_parity_odd_headers(catalog):
+    table = "svc_parity_odd"
+    _import_files(catalog, table, [b"my col,,a,a\n1,2,3,4\n5,,7,\"8,9\"\n"])
+    try:
+        sel = ColumnSelection(table, ["my col", "Unnamed: 1", "a", "`a.1`"])
+        out = _assert_same_as_spark(catalog, sel)
+        assert out["data"] == 'my col,Unnamed: 1,a,a.1\n1,2,3,4\n5,,7,"8,9"\n'
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def test_export_parity_empty_table(catalog):
+    table = "svc_parity_empty"
+    catalog.sql(f"CREATE TABLE {table} (a STRING, b STRING) USING parquet")
+    try:
+        out = _assert_same_as_spark(catalog, ColumnSelection(table, ["a"]))
+        assert out == {"status": "success", "data": "", "count": 0, "message": "No data found"}
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def test_export_driver_read_over_bound_500(catalog, monkeypatch):
+    """The footers' row counts are checked against the bound before
+    any data is read: over it, the export fails with 500."""
+    table = "svc_bound"
+    _import_files(catalog, table, [b"a,b\n" + _rows(b"x", 3), b"a,b\n" + _rows(b"y", 2)])
+    try:
+        monkeypatch.setattr(csv_io, "EXPORT_MAX_ROWS", 5)
+        out, jobs = _export_jobs(catalog, ColumnSelection(table, ["a"]))
+        assert out["count"] == 5 and jobs == 0
+        monkeypatch.setattr(csv_io, "EXPORT_MAX_ROWS", 4)
+        out, jobs = _export_jobs(catalog, ColumnSelection(table, ["a"]))
+        assert isinstance(out, ApiError) and jobs == 0
+        assert out.status_code == 500 and "max_rows" in out.detail
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def _shadowed_by_view(spark, table):
+    spark.sql(f"CREATE TABLE {table}_src (a STRING) USING parquet")
+    spark.sql(f"INSERT INTO {table}_src VALUES ('from view')")
+    spark.table(f"{table}_src").createOrReplaceTempView(table)
+    return "a\nfrom view\n"
+
+
+def _int_column(spark, table):
+    spark.sql(f"INSERT INTO {table} VALUES (7, 'x')")
+    return "a\n7\n"
+
+
+def _char_column(spark, table):
+    spark.sql(f"INSERT INTO {table} VALUES ('1', 'x')")
+    return "a\n1  \n"
+
+
+def _partitioned(spark, table):
+    spark.sql(f"INSERT INTO {table} VALUES ('1', 'x')")
+    return "a\n1\n"
+
+
+def _subdirectory(spark, table):
+    spark.sql(f"INSERT INTO {table} VALUES ('1', 'x')")
+    os.mkdir(os.path.join(_location(spark, table), "_temporary"))
+    return "a\n1\n"
+
+
+@pytest.mark.parametrize(
+    "ddl, setup",
+    [
+        ("(a STRING) USING parquet", _shadowed_by_view),
+        ("(a INT, b STRING) USING parquet", _int_column),
+        ("(a CHAR(3), b STRING) USING parquet", _char_column),
+        ("(a STRING, b STRING) USING parquet PARTITIONED BY (b)", _partitioned),
+        ("(a STRING, b STRING) USING parquet", _subdirectory),
+    ],
+    ids=["temp-view", "int", "char", "partitioned", "subdirectory"],
+)
+def test_export_falls_back_to_spark(catalog, ddl, setup):
+    """Where the driver read cannot be sure of Spark's answer, the
+    export runs its one Spark job and returns Spark's rows."""
+    table = f"svc_fallback_{setup.__name__.strip('_')}"
+    catalog.sql(f"CREATE TABLE {table} {ddl}")
+    try:
+        expected = setup(catalog, table)
+        out, jobs = _export_jobs(catalog, ColumnSelection(table, ["a"]))
+        assert out["data"] == expected and jobs == 1
+    finally:
+        catalog.catalog.dropTempView(table)
+        catalog.sql(f"DROP TABLE IF EXISTS {table}_src")
+        catalog.sql(f"DROP TABLE {table}")
+
+
+def test_export_unresolved_column_500(catalog):
+    """A missing column or a field of a string still fails with 500; a
+    star is Spark's to expand."""
+    table = "svc_unresolved"
+    _import_files(catalog, table, [b"a,b\n1,2\n"])
+    try:
+        for columns in (["c"], ["a", "b.c"]):
+            out, _ = _export_jobs(catalog, ColumnSelection(table, columns))
+            assert isinstance(out, ApiError) and out.status_code == 500, columns
+        out, jobs = _export_jobs(catalog, ColumnSelection(table, ["*"]))
+        assert out["data"] == "a,b\n1,2\n" and jobs == 1
+    finally:
+        catalog.sql(f"DROP TABLE {table}")
 
 
 def test_list_tables_unknown_db_raises(catalog):
