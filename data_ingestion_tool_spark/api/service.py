@@ -59,7 +59,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..catalog import list_tables, schema_to_columns
+from ..catalog import TableNotFoundError, describe_table, list_tables
 from ..sources import csv_io
 from ..sources.csv_io import csv_text, export_csv_rows, validate_upload_extension
 from ..sources.ingest import append_upload, read_columns
@@ -104,24 +104,16 @@ def get_columns(spark: SparkSession, conn: ConnectionInfo, table: str) -> dict[s
     """EXISTS guard + DESCRIBE (main.py:128-153): 404 when absent, else
     per-column name/type/default/comment — from the routed server when
     external routing is enabled, else from the session catalog."""
-    be = None
     try:
         be = route(conn)
-        exists = (
-            be.table_exists(table)
-            if be is not None
-            else spark.catalog.tableExists(table)
-        )
-    except Exception as e:  # noqa: BLE001
-        raise ApiError(400, f"Failed to get columns: {e}") from e
-    if not exists:
-        raise ApiError(404, f"Table {table} does not exist")
-    try:
-        cols = (
-            be.columns(table)
-            if be is not None
-            else schema_to_columns(spark.table(table).schema)
-        )
+        if be is None:
+            cols = describe_table(spark, table)
+        elif not be.table_exists(table):
+            raise TableNotFoundError(table)
+        else:
+            cols = be.columns(table)
+    except TableNotFoundError as e:
+        raise ApiError(404, f"Table {table} does not exist") from e
     except Exception as e:  # noqa: BLE001
         raise ApiError(400, f"Failed to get columns: {e}") from e
     return {"status": "success", "columns": cols, "count": len(cols)}

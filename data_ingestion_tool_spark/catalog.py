@@ -126,13 +126,9 @@ def string_rule(field: T.StructField) -> str | None:
     return field.metadata.get(CHAR_VARCHAR_KEY, "string")
 
 
-def table_exists(spark: SparkSession, name: str) -> bool:
-    return spark.catalog.tableExists(name)
-
-
 def describe_table(spark: SparkSession, name: str) -> list[dict[str, str]]:
     """DESCRIBE TABLE → [{name, type, default, comment}] (main.py:141-147)."""
-    if not table_exists(spark, name):
+    if not spark.catalog.tableExists(name):
         raise TableNotFoundError(f"Table '{name}' not found")
     return schema_to_columns(spark.table(name).schema)
 

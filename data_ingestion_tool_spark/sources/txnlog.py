@@ -22,6 +22,11 @@ Design points, scaled down but real:
   ``remove`` over entries ≤ v, resolved driver-side over kilobytes of
   JSON; the DATA read is a normal distributed parquet scan of the live
   files, so partition pruning / predicate pushdown apply unchanged.
+- **One fold, one commit loop.** Every state read replays the log in
+  ``TxnLogTable._fold`` (each entry ≤ v read once; ``has_meta`` alone
+  scans every entry, live or retired), and every write goes through
+  ``TxnLogTable._commit`` (parquet written once, entry put, rebuilt at
+  the next version on a lost race).
 """
 
 from __future__ import annotations
@@ -29,12 +34,25 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Iterator
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 class CommitConflict(RuntimeError):
     """Another writer committed this version first."""
+
+
+class _Batch(NamedTuple):
+    """A live batch as the log fold sees it: name, the version that added
+    it (its sequence number) and the adding entry's spec and meta."""
+
+    name: str
+    version: int
+    spec: tuple = ()
+    meta: dict = {}
 
 
 class TxnLogTable:
@@ -74,6 +92,161 @@ class TxnLogTable:
         finally:
             os.unlink(tmp)
 
+    def _path(self, batch: str) -> str:
+        return os.path.join(self.root, "data", batch)
+
+    def _fold(
+        self, version: int | None = None
+    ) -> Iterator[tuple[int, list[_Batch], list[_Batch]]]:
+        """The one replay of the log: walk the entries ≤ ``version``
+        (default: latest) in order, reading each once, and yield
+        ``(v, data, deletes)`` after each — the live ``add`` and
+        ``add_deletes`` batches as of v. An empty table yields nothing;
+        an unknown ``version`` raises ``ValueError``."""
+        versions = self.versions()
+        if version is None:
+            version = versions[-1] if versions else -1
+        elif versions and version not in versions:
+            raise ValueError(f"unknown version {version}")
+        data, dels = [], []
+        for v in versions:
+            if v > version:
+                break
+            e = self._entry(v)
+            gone = set(e.get("remove", []))
+            # new lists each step: a caller may keep an earlier state
+            data = [b for b in data if b.name not in gone] + [
+                _Batch(b, v, tuple(e.get("spec", ())), e.get("meta", {}))
+                for b in e.get("add", [])
+            ]
+            dels = [b for b in dels if b.name not in gone] + [
+                _Batch(b, v) for b in e.get("add_deletes", [])
+            ]
+            yield v, data, dels
+
+    def _live(
+        self, version: int | None = None
+    ) -> tuple[list[_Batch], list[_Batch]]:
+        """The fold's last state: live (data, deletes) as of ``version``."""
+        data, dels = [], []
+        for _, data, dels in self._fold(version):
+            pass
+        return data, dels
+
+    def _scan(
+        self, batches: list[_Batch], tag: str | None = None
+    ) -> DataFrame:
+        """One read of ``batches``; with ``tag``, each row carries the
+        version that added its batch in that column (the sequence
+        number the tombstone join compares)."""
+        from pyspark.sql import functions as F
+
+        if not any(b.spec for b in batches):
+            # ONE multi-path scan for ALL batches; each row's commit
+            # version recovered from input_file_name() via a broadcast
+            # literal map — round-13: the old per-batch scan-union made
+            # every MoR snapshot O(live batches) scan nodes, so a
+            # B-batch merge feed paid O(B²) scan instantiations before
+            # compaction (measured 25-45% of MoR merge wall in
+            # tools/soak_scd2.py)
+            paths = [self._path(b.name) for b in batches]
+            df = self.spark.read.parquet(*paths)
+            if tag is None:
+                return df
+            vmap = F.create_map(
+                *[F.lit(x) for b in batches for x in (b.name, b.version)]
+            )
+            # the batch is the file's parent directory: anchored at the
+            # end, so a table root that itself contains "/data/" (which
+            # an unanchored match would take for the batch) still maps
+            batch_of = F.regexp_extract(
+                F.input_file_name(), r"/data/([^/]+)/[^/]+$", 1
+            )
+            return df.withColumn(tag, vmap[batch_of])
+        # batches committed with a partition spec carry partition trees
+        # that a multi-root scan can't discover together
+        # (CONFLICTING_DIRECTORY_STRUCTURES): one scan per batch, each
+        # still pruning on its own spec
+        parts = [self.spark.read.parquet(self._path(b.name)) for b in batches]
+        if tag is not None:
+            parts = [
+                p.withColumn(tag, F.lit(b.version))
+                for p, b in zip(parts, batches)
+            ]
+        return reduce(DataFrame.unionByName, parts)
+
+    def _tombstoned(
+        self, df: DataFrame, dels: list[_Batch], key: str, how: str
+    ) -> DataFrame:
+        """The sequence-aware tombstone join: a delete batch committed at
+        version d matches ``key`` only in rows whose ``_data_v`` is
+        < d, so a key re-inserted AFTER its deletion survives (Iceberg
+        sequence-number semantics). ``left_anti`` keeps the visible
+        rows, ``left_semi`` the hidden ones. One distributed hash join on
+        the key with the version comparison as residual; the tombstone
+        side is usually broadcast-sized."""
+        from pyspark.sql import functions as F
+
+        dk = self._scan(dels, "_del_v").select(
+            F.col(key).alias("_del_key"), "_del_v"
+        )
+        cond = (F.col(key) == F.col("_del_key")) & (
+            F.col("_del_v") > F.col("_data_v")
+        )
+        return df.join(F.broadcast(dk), cond, how)
+
+    def _commit(
+        self,
+        data: DataFrame | None,
+        deletes: DataFrame | None,
+        max_retries: int,
+        overwrite: bool = False,
+        remove: list[str] | None = None,
+        meta: dict | None = None,
+        partition_by: list[str] | None = None,
+    ) -> tuple[int, str]:
+        """The one commit loop: probe the next version, write each
+        parquet batch ONCE, then put the entry; on ``CommitConflict``
+        rebuild the entry at the next version — only the cheap log put
+        retries. An overwrite recomputes its drop list from the fold on
+        every try, so a rival's batch committed meanwhile is retired
+        too. Returns ``(version, first batch written)``."""
+        versions = self.versions()
+        v = (versions[-1] + 1) if versions else 0
+        batch = dbatch = None
+        fields: dict = {}  # the entry's lists and tags, fixed across tries
+        if data is not None:
+            batch = f"batch-{v:05d}-{os.urandom(4).hex()}"
+            writer = data.write.mode("error")
+            if partition_by:
+                # PARTITION EVOLUTION: each batch carries its own physical
+                # layout spec (Iceberg spec-id semantics — the spec lives
+                # in the log entry, not table-global state), so later
+                # commits may partition differently without rewriting old
+                # batches.
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(self._path(batch))
+            fields["add"] = [batch]
+        if deletes is not None:
+            dbatch = f"batch-{v:05d}-del-{os.urandom(4).hex()}"
+            deletes.write.mode("error").parquet(self._path(dbatch))
+            fields["add_deletes"] = [dbatch]
+        if meta:
+            fields["meta"] = meta
+        if partition_by:
+            fields["spec"] = list(partition_by)
+        for _ in range(max_retries):
+            if overwrite:
+                live, live_dels = self._live()
+                remove = [b.name for b in live + live_dels]
+            entry = {"version": v, "remove": sorted(remove or []), **fields}
+            try:
+                self._put_entry(v, entry)
+                return v, batch or dbatch
+            except CommitConflict:
+                v = self.versions()[-1] + 1
+        raise CommitConflict(f"gave up after {max_retries} retries")
+
     # -- public API ----------------------------------------------------
 
     def commit(
@@ -97,43 +270,13 @@ class TxnLogTable:
         writer metadata to the log entry (e.g. a streaming micro-batch
         id — the idempotence token an exactly-once sink scans with
         ``has_meta``). Returns ``(version, batch_name)``. The parquet
-        write happens ONCE; only the cheap log put retries on a
-        version race.
+        write happens ONCE; only the cheap log put retries on a version
+        race.
         """
-        versions = self.versions()
-        v = (versions[-1] + 1) if versions else 0
-        batch = f"batch-{v:05d}-{os.urandom(4).hex()}"
-        writer = df.write.mode("error")
-        if partition_by:
-            # PARTITION EVOLUTION: each batch carries its own physical
-            # layout spec (Iceberg spec-id semantics — the spec lives in
-            # the log entry, not table-global state), so later commits
-            # may partition differently without rewriting old batches.
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.root, "data", batch))
-        for _ in range(max_retries):
-            drop = sorted(
-                self.live_batches()
-                + [
-                    b
-                    for (b, _) in self._live_with_versions(
-                        None, "add_deletes"
-                    )
-                ]
-                if mode == "overwrite"
-                else (remove or [])
-            )
-            entry = {"version": v, "add": [batch], "remove": drop}
-            if meta:
-                entry["meta"] = meta
-            if partition_by:
-                entry["spec"] = list(partition_by)
-            try:
-                self._put_entry(v, entry)
-                return v, batch
-            except CommitConflict:
-                v = self.versions()[-1] + 1
-        raise CommitConflict(f"gave up after {max_retries} retries")
+        return self._commit(
+            df, None, max_retries, mode == "overwrite", remove, meta,
+            partition_by,
+        )
 
     def has_meta(self, key: str, value) -> bool:
         """True iff some committed entry carries ``meta[key] == value``
@@ -146,21 +289,7 @@ class TxnLogTable:
         )
 
     def live_batches(self, version: int | None = None) -> list[str]:
-        versions = self.versions()
-        if not versions:
-            return []
-        if version is None:
-            version = versions[-1]
-        if version not in versions:
-            raise ValueError(f"unknown version {version}")
-        live: list[str] = []
-        for v in versions:
-            if v > version:
-                break
-            e = self._entry(v)
-            live = [b for b in live if b not in set(e.get("remove", []))]
-            live.extend(e.get("add", []))
-        return live
+        return [b.name for b in self._live(version)[0]]
 
     def commit_deletes(
         self, keys_df: DataFrame, max_retries: int = 5
@@ -170,21 +299,7 @@ class TxnLogTable:
         rewritten — readers apply the tombstones at scan time
         (``snapshot_mor``), and a later compaction folds them in. The
         Iceberg equality-delete-file pattern on this format."""
-        versions = self.versions()
-        v = (versions[-1] + 1) if versions else 0
-        batch = f"batch-{v:05d}-del-{os.urandom(4).hex()}"
-        keys_df.write.mode("error").parquet(
-            os.path.join(self.root, "data", batch)
-        )
-        for _ in range(max_retries):
-            try:
-                self._put_entry(
-                    v, {"version": v, "add_deletes": [batch], "remove": []}
-                )
-                return v, batch
-            except CommitConflict:
-                v = self.versions()[-1] + 1
-        raise CommitConflict(f"gave up after {max_retries} retries")
+        return self._commit(None, keys_df, max_retries)
 
     def commit_merge(
         self,
@@ -203,61 +318,24 @@ class TxnLogTable:
         rows, so a replay that rebuilds its merge input from
         ``snapshot_mor`` sees those keys as absent and permanently
         loses their history. One ``_put_entry`` makes tombstone+append
-        all-or-nothing — ``_live_with_versions`` already resolves both
-        the ``add`` and ``add_deletes`` lists per entry.
+        all-or-nothing — the log fold already resolves both the
+        ``add`` and ``add_deletes`` lists per entry.
 
         Sequence semantics: both sides carry the SAME version v, and
         :meth:`snapshot_mor` applies a tombstone only to data batches
         with strictly smaller version (``_del_v > _data_v``), so the
         entry's own append is never hidden by its own tombstone while
         every prior batch's touched rows are."""
-        versions = self.versions()
-        v = (versions[-1] + 1) if versions else 0
-        batch = f"batch-{v:05d}-{os.urandom(4).hex()}"
-        dbatch = f"batch-{v:05d}-del-{os.urandom(4).hex()}"
-        data_df.write.mode("error").parquet(
-            os.path.join(self.root, "data", batch)
-        )
-        delete_keys_df.write.mode("error").parquet(
-            os.path.join(self.root, "data", dbatch)
-        )
-        for _ in range(max_retries):
-            entry = {
-                "version": v,
-                "add": [batch],
-                "add_deletes": [dbatch],
-                "remove": [],
-            }
-            if meta:
-                entry["meta"] = meta
-            try:
-                self._put_entry(v, entry)
-                return v, batch
-            except CommitConflict:
-                v = self.versions()[-1] + 1
-        raise CommitConflict(f"gave up after {max_retries} retries")
+        return self._commit(data_df, delete_keys_df, max_retries, meta=meta)
 
     def _live_with_versions(
         self, version: int | None, key: str
     ) -> list[tuple[str, int]]:
         """Live batches under log-entry list ``key`` ('add' or
         'add_deletes'), each with the version that added it."""
-        versions = self.versions()
-        if not versions:
-            return []
-        if version is None:
-            version = versions[-1]
-        if version not in versions:
-            raise ValueError(f"unknown version {version}")
-        live: list[tuple[str, int]] = []
-        for v in versions:
-            if v > version:
-                break
-            e = self._entry(v)
-            gone = set(e.get("remove", []))
-            live = [(b, bv) for (b, bv) in live if b not in gone]
-            live.extend((b, v) for b in e.get(key, []))
-        return live
+        data, dels = self._live(version)
+        live = dels if key == "add_deletes" else data
+        return [(b.name, b.version) for b in live]
 
     def snapshot_mor(
         self, key_col: str, version: int | None = None
@@ -266,76 +344,17 @@ class TxnLogTable:
         batches applied SEQUENCE-AWARE — a delete committed at version
         d tombstones ``key_col`` matches only in data batches added at
         versions < d, so a key re-inserted AFTER its deletion survives
-        (Iceberg sequence-number semantics). The anti-join is one
-        distributed hash join on the key with the version comparison as
-        residual; the tombstone side is usually broadcast-sized."""
-        from pyspark.sql import functions as F
-
-        data = self._live_with_versions(version, "add")
+        (Iceberg sequence-number semantics; see :meth:`_tombstoned`)."""
+        data, dels = self._live(version)
         if not data:
             raise ValueError("empty table has no snapshot")
-        dels = self._live_with_versions(version, "add_deletes")
         if not dels:
-            # tombstone-free table: ONE multi-path parquet scan (no
-            # per-batch version tagging, no anti-join) — snapshot_mor
-            # is then exactly snapshot, so callers can always use it
-            return self.snapshot(version)
-
-        def _specced(batches) -> bool:
-            """True if any batch was committed with a partition spec —
-            those dirs carry partition trees that a multi-root scan
-            can't discover together (snapshot_evolved's domain)."""
-            vs = {v for (_, v) in batches}
-            return any(self._entry(v).get("spec") for v in vs)
-
-        def read_tagged(batches, tag):
-            if not _specced(batches):
-                # ONE multi-path scan for ALL live batches; each row's
-                # commit version recovered from input_file_name() via a
-                # broadcast literal map — round-13: the old per-batch
-                # scan-union made every MoR snapshot O(live batches)
-                # scan nodes, so a B-batch merge feed paid O(B²) scan
-                # instantiations before compaction (measured 25-45%
-                # of MoR merge wall in tools/soak_scd2.py)
-                paths = [
-                    os.path.join(self.root, "data", b) for (b, _) in batches
-                ]
-                vmap = F.create_map(
-                    *[
-                        x
-                        for (b, v) in batches
-                        for x in (F.lit(b), F.lit(v))
-                    ]
-                )
-                return self.spark.read.parquet(*paths).withColumn(
-                    tag,
-                    vmap[
-                        F.regexp_extract(
-                            F.input_file_name(), r"/data/([^/]+)/", 1
-                        )
-                    ],
-                )
-            parts = [
-                self.spark.read.parquet(
-                    os.path.join(self.root, "data", b)
-                ).withColumn(tag, F.lit(v))
-                for (b, v) in batches
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        df = read_tagged(data, "_data_v")
-        if not dels:
-            return df.drop("_data_v")
-        dk = read_tagged(dels, "_del_v").select(
-            F.col(key_col).alias("_del_key"), "_del_v"
-        )
-        cond = (F.col(key_col) == F.col("_del_key")) & (
-            F.col("_del_v") > F.col("_data_v")
-        )
-        return df.join(F.broadcast(dk), cond, "left_anti").drop("_data_v")
+            # tombstone-free table: no per-batch version tagging, no
+            # anti-join — on an unpartitioned table the ONE multi-path
+            # scan of snapshot, so callers can always use snapshot_mor
+            return self._scan(data)
+        df = self._scan(data, "_data_v")
+        return self._tombstoned(df, dels, key_col, "left_anti").drop("_data_v")
 
     def changefeed(
         self, v_from: int, v_to: int, key_cols: list[str]
@@ -371,26 +390,22 @@ class TxnLogTable:
         """
         from pyspark.sql import functions as F
 
-        data_after = dict(self._live_with_versions(v_to, "add"))
-        data_before = dict(self._live_with_versions(v_from, "add"))
-        dels_after = self._live_with_versions(v_to, "add_deletes")
-        dels_before = self._live_with_versions(v_from, "add_deletes")
+        # both endpoints from ONE replay up to the later of them
+        at = {
+            v: (data, dels)
+            for v, data, dels in self._fold(max(v_from, v_to))
+            if v in (v_from, v_to)
+        }
+        missing = {v_from, v_to} - at.keys()
+        if missing:
+            raise ValueError(f"unknown version {min(missing)}")
+        data_before, dels_before = at[v_from]
+        data_after, dels_after = at[v_to]
         new_dels = [d for d in dels_after if d not in dels_before]
         gone_dels = [d for d in dels_before if d not in dels_after]
 
-        def read_tagged(batches: list[tuple[str, int]]) -> DataFrame | None:
-            if not batches:
-                return None
-            parts = [
-                self.spark.read.parquet(
-                    os.path.join(self.root, "data", b)
-                ).withColumn("_v", F.lit(v))
-                for (b, v) in batches
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+        def read_tagged(batches: list[_Batch]) -> DataFrame | None:
+            return self._scan(batches, "_data_v") if batches else None
 
         if (dels_after or dels_before) and len(key_cols) != 1:
             raise ValueError(
@@ -398,30 +413,20 @@ class TxnLogTable:
             )
         kc = key_cols[0]
 
-        def tomb_cond() -> "F.Column":
-            return (F.col(kc) == F.col("_del_key")) & (
-                F.col("_del_v") > F.col("_v")
-            )
-
-        def del_keys(dels: list[tuple[str, int]]) -> DataFrame:
-            return read_tagged(dels).select(
-                F.col(kc).alias("_del_key"), F.col("_v").alias("_del_v")
-            )
-
         def apply_tombs(
-            df: DataFrame | None, dels: list[tuple[str, int]], how: str
+            df: DataFrame | None, dels: list[_Batch], how: str
         ) -> DataFrame | None:
-            """Sequence-aware tombstone join: 'left_anti' keeps visible
-            rows, 'left_semi' keeps the hidden ones."""
+            """'left_anti' keeps visible rows, 'left_semi' keeps the
+            hidden ones."""
             if df is None or not dels:
                 return df if how == "left_anti" else None
-            return df.join(F.broadcast(del_keys(dels)), tomb_cond(), how)
+            return self._tombstoned(df, dels, kc, how)
 
-        added = [(b, v) for b, v in data_after.items() if b not in data_before]
-        removed = [
-            (b, v) for b, v in data_before.items() if b not in data_after
-        ]
-        both = [(b, v) for b, v in data_before.items() if b in data_after]
+        before = {b.name for b in data_before}
+        after = {b.name for b in data_after}
+        added = [b for b in data_after if b.name not in before]
+        removed = [b for b in data_before if b.name not in after]
+        both = [b for b in data_before if b.name in after]
 
         if not (added or removed or new_dels or gone_dels):
             raise ValueError("no batch churn between versions")
@@ -445,19 +450,12 @@ class TxnLogTable:
             )
             tombstoned = apply_tombs(visible_before, new_dels, "left_semi")
 
-        def merge(a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
-            if a is None:
-                return b
-            if b is None:
-                return a
-            return a.unionByName(b)
+        def merge(*dfs: DataFrame | None) -> DataFrame | None:
+            parts = [d.drop("_data_v") for d in dfs if d is not None]
+            return reduce(DataFrame.unionByName, parts) if parts else None
 
         add_df = merge(vis_add, resurrect)
         rem_df = merge(vis_rem, tombstoned)
-        if add_df is not None:
-            add_df = add_df.drop("_v")
-        if rem_df is not None:
-            rem_df = rem_df.drop("_v")
 
         def tag(df: DataFrame, t: str) -> DataFrame:
             return df.withColumn("change_type", F.lit(t))
@@ -470,23 +468,17 @@ class TxnLogTable:
             return tag(rem_df, "delete")
         add_keys = add_df.select(*key_cols)
         rem_keys = rem_df.select(*key_cols)
-        return (
-            tag(add_df.join(rem_keys, key_cols, "left_anti"), "insert")
-            .unionByName(
-                tag(rem_df.join(add_keys, key_cols, "left_anti"), "delete")
-            )
-            .unionByName(
-                tag(
-                    rem_df.join(add_keys, key_cols, "left_semi"),
-                    "update_preimage",
-                )
-            )
-            .unionByName(
-                tag(
-                    add_df.join(rem_keys, key_cols, "left_semi"),
-                    "update_postimage",
-                )
-            )
+        return reduce(
+            DataFrame.unionByName,
+            (
+                tag(df.join(keys, key_cols, how), t)
+                for df, keys, how, t in [
+                    (add_df, rem_keys, "left_anti", "insert"),
+                    (rem_df, add_keys, "left_anti", "delete"),
+                    (rem_df, add_keys, "left_semi", "update_preimage"),
+                    (add_df, rem_keys, "left_semi", "update_postimage"),
+                ]
+            ),
         )
 
     def set_ref(self, name: str, version: int) -> None:
@@ -529,20 +521,13 @@ class TxnLogTable:
         The decision is manifest math over the driver-side JSON log —
         no file is opened to decide; at 100 TB this is what turns a
         full-table scan into a read of the few overlapping files."""
-        live = set(self.live_batches(version))
+        live, _ = self._live(version)
         keep: list[str] = []
-        total = 0
-        for v in self.versions():
-            e = self._entry(v)
-            for b in e.get("add", []):
-                if b not in live:
-                    continue
-                total += 1
-                m = e.get("meta", {})
-                zmin, zmax = m.get("zmin"), m.get("zmax")
-                if zmin is None or zmax is None or (zmin <= hi and zmax >= lo):
-                    keep.append(b)
-        return sorted(keep), total
+        for b in live:
+            zmin, zmax = b.meta.get("zmin"), b.meta.get("zmax")
+            if zmin is None or zmax is None or (zmin <= hi and zmax >= lo):
+                keep.append(b.name)
+        return sorted(keep), len(live)
 
     def vacuum(self, retain_versions: int = 1) -> list[str]:
         """Delete data batches unreachable from the newest
@@ -557,13 +542,14 @@ class TxnLogTable:
         parallel on an object store."""
         import shutil
 
-        versions = self.versions()
+        retained = set(
+            self.versions()[-retain_versions:] if retain_versions else []
+        )
         keep: set[str] = set()
-        for v in versions[-retain_versions:] if retain_versions else []:
-            keep.update(self.live_batches(v))
-            keep.update(
-                b for (b, _) in self._live_with_versions(v, "add_deletes")
-            )
+        # every retained snapshot from ONE replay
+        for v, data, dels in self._fold() if retained else ():
+            if v in retained:
+                keep.update(b.name for b in data + dels)
         datadir = os.path.join(self.root, "data")
         removed = sorted(
             b
@@ -589,9 +575,7 @@ class TxnLogTable:
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(
-            *(os.path.join(self.root, "data", b) for b in live)
-        )
+        return reader.parquet(*map(self._path, live))
 
     def snapshot_evolved(
         self, version: int | None = None, key_col: str | None = None
@@ -615,71 +599,24 @@ class TxnLogTable:
         requires ``key_col``. Reading a MOR-delete table without
         ``key_col`` raises instead of silently resurrecting deleted
         rows."""
-        from pyspark.sql import functions as F
-
-        versions = self.versions()
-        if not versions:
-            raise ValueError("empty table has no snapshot")
-        if version is None:
-            version = versions[-1]
-        elif version not in versions:
-            raise ValueError(f"unknown version {version}")
-        live: list[str] = []
-        spec_of: dict[str, tuple] = {}
-        added_at: dict[str, int] = {}
-        for v in versions:
-            if v > version:
-                break
-            e = self._entry(v)
-            removed = set(e.get("remove", []))
-            live = [b for b in live if b not in removed]
-            for b in e.get("add", []):
-                live.append(b)
-                spec_of[b] = tuple(e.get("spec", ()))
-                added_at[b] = v
+        live, dels = self._live(version)
         if not live:
             raise ValueError("empty table has no snapshot")
-        dels = self._live_with_versions(version, "add_deletes")
         if dels and key_col is None:
             raise ValueError(
                 "table has live MoR delete batches; pass key_col= so "
                 "snapshot_evolved can apply them (or use snapshot_mor)"
             )
-        groups: dict[tuple, list[str]] = {}
+        groups: dict[tuple, list[_Batch]] = {}
         for b in live:
-            groups.setdefault(spec_of[b], []).append(b)
-        out: DataFrame | None = None
-        for spec in sorted(groups):
-            # one scan per batch: multi-root partition discovery over
-            # sibling batch dirs raises CONFLICTING_DIRECTORY_STRUCTURES
-            # (each batch root is its own partition tree), and the MoR
-            # residual needs each row tagged with its batch's sequence
-            # number anyway. Each scan still prunes on its own spec.
-            part: DataFrame | None = None
-            for b in groups[spec]:
-                p = self.spark.read.parquet(
-                    os.path.join(self.root, "data", b)
-                )
-                if dels:
-                    p = p.withColumn("_data_v", F.lit(added_at[b]))
-                part = p if part is None else part.unionByName(p)
-            out = (
-                part
-                if out is None
-                else out.unionByName(part, allowMissingColumns=True)
-            )
-        if not dels:
-            return out
-        dk_parts = [
-            self.spark.read.parquet(os.path.join(self.root, "data", b))
-            .select(F.col(key_col).alias("_del_key"))
-            .withColumn("_del_v", F.lit(v))
-            for (b, v) in dels
-        ]
-        dk = dk_parts[0]
-        for p in dk_parts[1:]:
-            dk = dk.unionByName(p)
-        cond = (F.col(key_col) == F.col("_del_key")) & (
-            F.col("_del_v") > F.col("_data_v")
+            groups.setdefault(b.spec, []).append(b)
+        # the MoR residual needs each row tagged with its batch's
+        # sequence number; an untombstoned read needs no tag
+        tag = "_data_v" if dels else None
+        df = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            (self._scan(groups[spec], tag) for spec in sorted(groups)),
         )
-        return out.join(F.broadcast(dk), cond, "left_anti").drop("_data_v")
+        if not dels:
+            return df
+        return self._tombstoned(df, dels, key_col, "left_anti").drop("_data_v")

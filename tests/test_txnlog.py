@@ -518,3 +518,66 @@ def test_changefeed_equals_visible_diff_random_ops(spark, tmp_path, seed):
             assert pre[k] == before[k] and post[k] == after[k], (
                 v1, v2, "update values", k,
             )
+
+
+def test_log_read_budget(spark, tmp_path, monkeypatch):
+    """Every state read replays the log once: at V committed versions a
+    call opens at most V log entries, and an append opens none. Entries
+    are counted as ``_log/*.json`` opens through the module's ``open``,
+    the way ``perfbench/stream_ingest.py`` counts them."""
+    import builtins
+    import os
+
+    from data_ingestion_tool_spark.sources import txnlog
+
+    def keys(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("k"))
+
+    t = TxnLogTable(spark, str(tmp_path / "t"))
+    for i in range(5):
+        zone = {"zmin": str(i), "zmax": str(i)}
+        t.commit(keys(10 * i, 10 * i + 10), meta=zone)
+    t.commit_deletes(keys(0, 3))
+    t.commit(keys(100, 103))
+    n_versions = len(t.versions())
+    opened: list[str] = []
+
+    def counting_open(file, mode="r", *args, **kwargs):
+        head, name = os.path.split(os.fspath(file))
+        if "r" in mode and os.path.basename(head) == "_log":
+            if name.endswith(".json"):
+                opened.append(name)
+        return builtins.open(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(txnlog, "open", counting_open, raising=False)
+
+    def reads(call) -> int:
+        opened.clear()
+        call()
+        return len(opened)
+
+    got = {
+        "has_meta": reads(lambda: t.has_meta("src_batch", 0)),
+        "live_batches": reads(t.live_batches),
+        "snapshot_mor": reads(lambda: t.snapshot_mor("k")),
+        "zone_map_prune": reads(lambda: t.zone_map_prune("1", "2")),
+        "changefeed": reads(lambda: t.changefeed(0, n_versions - 1, ["k"])),
+        "vacuum": reads(lambda: t.vacuum(1)),
+        "overwrite": reads(lambda: t.commit(keys(0, 1), mode="overwrite")),
+    }
+    assert all(n <= n_versions for n in got.values()), (n_versions, got)
+    assert reads(lambda: t.commit(keys(5, 6))) == 0
+
+
+def test_snapshot_mor_under_a_root_containing_data(spark, tmp_path):
+    """Each row's batch is read from its file's parent directory, so a
+    table root that itself has a ``data`` component still gets its
+    tombstones applied (an unanchored match took that component for
+    the batch and resurrected the deleted keys)."""
+    t = TxnLogTable(spark, str(tmp_path / "data" / "t"))
+    t.commit(spark.range(6).select(F.col("id").alias("k")))
+    t.commit_deletes(spark.range(2).select(F.col("id").alias("k")))
+    t.commit(spark.range(10, 12).select(F.col("id").alias("k")))
+    assert sorted(r.k for r in t.snapshot_mor("k").collect()) == [
+        2, 3, 4, 5, 10, 11,
+    ]

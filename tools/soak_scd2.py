@@ -113,15 +113,10 @@ def _run(spark, src: str, root: str, cow_factor: int):
             "crc"
         ),
     ).collect()[0]
-    n_mor = len(
-        [v for v in t.versions() if t._entry(v).get("add_deletes")]
-    )
-    n_cow = len(
-        [
-            v
-            for v in t.versions()
-            if t._entry(v).get("remove") and not t._entry(v).get("add_deletes")
-        ]
+    entries = [t._entry(v) for v in t.versions()]
+    n_mor = sum(1 for e in entries if e.get("add_deletes"))
+    n_cow = sum(
+        1 for e in entries if e.get("remove") and not e.get("add_deletes")
     )
     return {
         "secs": secs,
